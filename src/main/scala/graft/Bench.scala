@@ -122,6 +122,10 @@ object Bench {
       // slow as its worst straggler (see ScalingBench)
       .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
       .config("spark.sql.session.timeZone", "UTC")
+      // a warm crawl round compiles ~150-200 distinct generated classes;
+      // Spark's default cache of 100 evicts them every round (README,
+      // deploy notes)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

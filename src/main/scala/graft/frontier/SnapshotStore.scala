@@ -2,7 +2,11 @@ package graft.frontier
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Failure
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Iceberg-style snapshot layer over Parquet (SURVEY.md §7.0: no Iceberg
   * jars offline, so this provides the same commit semantics behind an
@@ -85,17 +89,17 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
     // history reads as a single scan — a per-version union's plan grows
     // O(versions) (round-2 VERDICT perf minor). Orphan dirs from a crash
     // can only be > latest committed version: allResults filters them out.
-    {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = SnapshotStore.commitEc
-      val writes =
-        Future(frontier.write.mode("overwrite").parquet(dir(v, "frontier"))) ::
-          Future(hosts.write.mode("overwrite").parquet(dir(v, "hosts"))) ::
-          results.map(r => Future(r.write.mode("overwrite").parquet(resultsDir(v)))).toList :::
-          concurrent.map(u => Future(u())).toList
-      Await.result(Future.sequence(writes), Duration.Inf)
-    }
+    //
+    // A failed unit fails the commit only after EVERY unit has finished:
+    // failing fast would leave sibling writes running into v=K/ while a
+    // retry of the round overwrites the same dirs. One thread per unit, so
+    // no unit queues behind another.
+    val units: Seq[() => Unit] =
+      Seq(() => frontier.write.mode("overwrite").parquet(dir(v, "frontier")),
+        () => hosts.write.mode("overwrite").parquet(dir(v, "hosts"))) ++
+        results.map(r => () => r.write.mode("overwrite").parquet(resultsDir(v))) ++
+        concurrent
+    SnapshotStore.runAll(units)
     val json = SnapshotStore.writeFlat(
       metaLazy ++ Map("version" -> v.toString, "hasResults" -> results.isDefined.toString))
     val tmp = Paths.get(s"$baseDir/.manifest-$v.tmp")
@@ -106,41 +110,73 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
   def readMeta(v: Int): Map[String, String] =
     SnapshotStore.parseFlat(Files.readString(manifestPath(v)))
 
-  /** Merge-on-read reconstruction of a delta-layout table at version `v`:
-    * union base..v, keep the NEWEST row per `key` — Iceberg merge-on-read
-    * semantics over plain parquet. The window's shuffle is on the same key
-    * the consuming join shuffles on anyway; what the layout buys is write
-    * cost ∝ changed rows instead of ∝ table size per round. */
-  private def mergeOnRead(part: String, key: String, base: Int, v: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val parts = (base to v).map(k =>
-      spark.read.parquet(dir(k, part)).withColumn("__v", lit(k)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("__v").desc)
-    parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      .withColumn("__rn", row_number().over(w))
+  /** The committed parts a read of `table` at version `v` scans, with the
+    * schema each one's footer records: base..v under the delta layout, v
+    * alone under the full one (and for a seen dir whose manifest is not yet
+    * sealed). A part dir holding no data file adds no rows and is skipped. */
+  private def partsOf(table: String, v: Int): Seq[(String, StructType)] = {
+    val meta = if (Files.exists(manifestPath(v))) readMeta(v) else Map.empty[String, String]
+    val base = meta.get(s"${table}Format") match {
+      case Some("delta") => meta(s"${table}Base").toInt
+      case _ => v
+    }
+    (base to v).map(dir(_, table)).flatMap(d => SnapshotStore.footerSchema(d).map(d -> _))
+  }
+
+  /** ONE parquet scan over `parts` under the union of their footer schemas
+    * — no schema-inference job, and a column a part lacks reads as null
+    * (what a by-name union of per-part reads gave). */
+  private def scan(table: String, parts: Seq[(String, StructType)]): DataFrame = {
+    require(parts.nonEmpty, s"$baseDir: no $table part holds a data file")
+    spark.read.schema(SnapshotStore.unionSchema(parts.map(_._2))).parquet(parts.map(_._1): _*)
+  }
+
+  /** Merge-on-read reconstruction of `table` at version `v`: one scan of
+    * base..v keeping the NEWEST row per `key` — Iceberg merge-on-read
+    * semantics over plain parquet. `only` restricts the result to the keys
+    * it holds, semi-joined BEFORE the keep-latest window so the window
+    * shuffles only those keys' rows. A row's version comes from its file
+    * path. A single part holds one row per key and needs no window. */
+  private def mergeOnRead(table: String, key: String, v: Int,
+                          only: Option[DataFrame] = None): DataFrame = {
+    val parts = partsOf(table, v)
+    val all = scan(table, parts)
+      .withColumn("__v", SnapshotStore.versionOfPath(col("_metadata.file_path")))
+    val rows = only.fold(all)(o => all.join(o.select(col(key)), Seq(key), "left_semi"))
+    if (parts.size <= 1) rows.drop("__v")
+    else rows
+      .withColumn("__rn", row_number().over(Window.partitionBy(col(key)).orderBy(col("__v").desc)))
       .filter(col("__rn") === 1)
       .drop("__v", "__rn")
   }
 
   /** The frontier at version v (merged view under the delta layout). */
-  def readFrontier(v: Int): DataFrame = {
-    val meta = readMeta(v)
-    meta.get("frontierFormat") match {
-      case Some("delta") => mergeOnRead("frontier", "id", meta("frontierBase").toInt, v)
-      case _ => spark.read.parquet(dir(v, "frontier"))
-    }
-  }
+  def readFrontier(v: Int): DataFrame = mergeOnRead("frontier", "id", v)
+
+  /** The merged frontier rows whose `id` occurs in `ids` — what a delta
+    * commit rewrites, without merging the whole table. */
+  def readFrontierFor(v: Int, ids: DataFrame): DataFrame = mergeOnRead("frontier", "id", v, Some(ids))
+
+  /** Every row of the frontier parts base..v, NOT merged: a key updated in
+    * a delta shows once per part that holds it. Its `urlNorm` values are
+    * the merged view's (rows are never deleted and an id's urlNorm never
+    * changes), which is all a membership anti-join needs. */
+  def readFrontierUnmerged(v: Int): DataFrame = scan("frontier", partsOf("frontier", v))
 
   /** Host politeness/breaker state at version v (merged view under the
     * delta layout — a delta commit writes only the hosts the round
     * touched, never the full 10^8-host table). */
-  def readHosts(v: Int): DataFrame = {
-    val meta = readMeta(v)
-    meta.get("hostsFormat") match {
-      case Some("delta") => mergeOnRead("hosts", "host", meta("hostsBase").toInt, v)
-      case _ => spark.read.parquet(dir(v, "hosts"))
-    }
+  def readHosts(v: Int): DataFrame = mergeOnRead("hosts", "host", v)
+
+  /** The merged host rows whose `host` occurs in `hosts`. */
+  def readHostsFor(v: Int, hosts: DataFrame): DataFrame = mergeOnRead("hosts", "host", v, Some(hosts))
+
+  /** Columns of `table`'s merged view at `v` that some part lacks (they
+    * read as null on that part's rows); empty once every part was written
+    * with the current schema. */
+  private[graft] def sparseColumns(table: String, v: Int): Set[String] = {
+    val schemas = partsOf(table, v).map(_._2.fieldNames.toSet)
+    if (schemas.isEmpty) Set.empty else schemas.reduce(_ union _) -- schemas.reduce(_ intersect _)
   }
 
   /** R7 seen-filter shards ((shard, bytes) rows), written as part of the
@@ -154,13 +190,7 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
   def hasSeen(v: Int): Boolean =
     Files.exists(Paths.get(dir(v, "seen"))) ||
       (Files.exists(manifestPath(v)) && readMeta(v).contains("seenFormat"))
-  def readSeen(v: Int): DataFrame = {
-    val meta = if (Files.exists(manifestPath(v))) readMeta(v) else Map.empty[String, String]
-    meta.get("seenFormat") match {
-      case Some("delta") => mergeOnRead("seen", "shard", meta("seenBase").toInt, v)
-      case _ => spark.read.parquet(dir(v, "seen"))
-    }
-  }
+  def readSeen(v: Int): DataFrame = mergeOnRead("seen", "shard", v)
 
   def hasResults(v: Int): Boolean = readMeta(v).get("hasResults").contains("true")
   /** One round's fetch records. Reads the appendable layout first, falling
@@ -261,15 +291,83 @@ object SnapshotStore {
     b.toString
   }
 
-  /** Shared daemon pool for concurrent commit writes: 4 threads covers the
-    * frontier/hosts/results triple plus one caller-supplied unit (the seen-
-    * shard write); Spark's scheduler interleaves the resulting jobs across
-    * free executor slots. */
-  private[frontier] lazy val commitEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-        val t = new Thread(r, "graft-snapshot-commit")
-        t.setDaemon(true)
-        t
-      }))
+  /** Run `units` concurrently, one daemon thread each, and wait for ALL of
+    * them; then rethrow the first failure in unit order, with any later
+    * ones attached as suppressed. */
+  private[frontier] def runAll(units: Seq[() => Unit]): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(units.size, 1), r => {
+      val t = new Thread(r, "graft-snapshot-commit")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val done = units.map(u => Future(u())).map(f => Await.ready(f, Duration.Inf).value.get)
+      done.collect { case Failure(e) => e } match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ =>
+      }
+    } finally pool.shutdown()
+  }
+
+  /** The Spark schema a part dir's data files were written with, from the
+    * first data file's footer (`org.apache.spark.sql.parquet.row.metadata`)
+    * — read on the driver, no job. None when the dir holds no data file.
+    * Cached per (file, length, mtime): a committed part never changes, and
+    * an overwritten orphan gets a new key. */
+  private[graft] def footerSchema(partDir: String): Option[StructType] = {
+    val p = Paths.get(partDir)
+    if (!Files.isDirectory(p)) None
+    else {
+      val files = Files.list(p)
+      // data files as Spark lists them: `_`/`.`-prefixed names are not data
+      def isData(name: String) =
+        name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+      val first = try files.iterator().asScala.filter(f => isData(f.getFileName.toString))
+        .minByOption(_.getFileName.toString)
+      finally files.close()
+      first.map { f =>
+        val key = s"$f|${Files.size(f)}|${Files.getLastModifiedTime(f).toMillis}"
+        footerCache.computeIfAbsent(key, _ => readFooterSchema(f))
+      }
+    }
+  }
+
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def readFooterSchema(file: Path): StructType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val in = HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), new org.apache.hadoop.conf.Configuration())
+    val reader = ParquetFileReader.open(in)
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    require(json != null, s"$file: no Spark schema in the parquet footer")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** By-name union of part schemas: columns in first-appearance order, all
+    * nullable (a column a part lacks reads as null there). A column whose
+    * type differs between parts is refused rather than guessed. */
+  private[frontier] def unionSchema(schemas: Seq[StructType]): StructType =
+    StructType(schemas.flatMap(_.fields).foldLeft(Vector.empty[StructField]) { (acc, f) =>
+      acc.find(_.name == f.name) match {
+        case None => acc :+ f.copy(nullable = true)
+        case Some(g) =>
+          require(g.dataType.catalogString == f.dataType.catalogString,
+            s"column ${f.name} is ${g.dataType.catalogString} in one part, " +
+              s"${f.dataType.catalogString} in another")
+          acc
+      }
+    })
+
+  /** The committed version of a state-table file, from its path
+    * `…/v=<K>/<table>/<file>` — anchored at the end, so a base dir that
+    * itself contains `/v=<n>/` does not match. */
+  private[frontier] def versionOfPath(path: Column): Column =
+    regexp_extract(path, "/v=([0-9]+)/[^/]+/[^/]+$", 1).cast("int")
 }

@@ -22,6 +22,10 @@ object CrawlJob {
       .appName("graft-crawl")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      // a warm crawl round compiles ~150-200 distinct generated classes;
+      // Spark's default cache of 100 evicts them every round (README,
+      // deploy notes)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

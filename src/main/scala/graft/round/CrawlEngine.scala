@@ -283,9 +283,10 @@ object CrawlEngine {
       .parseFlat(java.nio.file.Files.readString(markerPath))
       .get("robotsHosts") match {
         case Some("0") => Some(None)
-        case Some(_) if java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/robots_rules")) =>
-          Some(Some(spark.read.parquet(s"$dir/robots_rules")))
-        case _ => None
+        // read under the footer schema: no inference job on a resume
+        case Some(_) => graft.frontier.SnapshotStore.footerSchema(s"$dir/robots_rules")
+          .map(schema => Some(spark.read.schema(schema).parquet(s"$dir/robots_rules")))
+        case None => None
       }
   }
 
@@ -293,23 +294,26 @@ object CrawlEngine {
     * the multi-project round lack projectId/taskType — backfill the
     * configured defaults so resume works instead of raising
     * AnalysisException. New commits stamp `schemaVersion` so future
-    * incompatibilities can fail with a clear message instead. */
-  private[graft] def frontierCompat(df: DataFrame, cfg: CrawlConfig): DataFrame = {
+    * incompatibilities can fail with a clear message instead. `sparse`
+    * names the columns some part of the read lacks ([[SnapshotStore.sparseColumns]]);
+    * a column every part holds is left as it is. */
+  private[graft] def frontierCompat(df: DataFrame, cfg: CrawlConfig, sparse: Set[String]): DataFrame = {
     val cols = df.columns.toSet
-    // add-or-coalesce: a missing column is backfilled whole; a present one
-    // gets nulls filled (a delta merge over mixed-era snapshots null-fills
-    // old rows via unionByName allowMissingColumns)
+    // add-or-coalesce: a missing column is backfilled whole; one only some
+    // parts hold gets the other parts' nulls filled
     def fill(d: DataFrame, name: String, default: Column): DataFrame =
       if (!cols(name)) d.withColumn(name, default)
-      else d.withColumn(name, coalesce(col(name), default))
+      else if (sparse(name)) d.withColumn(name, coalesce(col(name), default))
+      else d
     fill(fill(df, "projectId", lit(cfg.projects.head.projectId)),
       "taskType", lit(cfg.projects.head.taskType))
   }
 
   /** Hosts-table back-compat: pre-D3 snapshots lack failCount. */
-  private[graft] def hostsCompat(df: DataFrame): DataFrame =
+  private[graft] def hostsCompat(df: DataFrame, sparse: Set[String]): DataFrame =
     if (!df.columns.contains("failCount")) df.withColumn("failCount", lit(0))
-    else df.withColumn("failCount", coalesce(col("failCount"), lit(0)))
+    else if (sparse("failCount")) df.withColumn("failCount", coalesce(col("failCount"), lit(0)))
+    else df
 
   /** Bootstrap snapshot v=0 from a seed list. */
   def bootstrap(
@@ -370,7 +374,8 @@ object CrawlEngine {
     * of partitions×n rows — measured as the round bottleneck at 200k).
     *
     * Range-repartition on the order keys (sampling pass), count rows per
-    * range (tiny collect), then rank = partition offset + local row_number.
+    * range (a partition-local pass, tiny collect), then rank = range
+    * offset + position in the locally sorted partition.
     * Exact for any partition boundaries because `order` is a total order
     * (unique id tiebreak), so crawl-order parity is preserved bit-for-bit.
     * Returns (result, cacheHandle, totalRows); callers unpersist the handle
@@ -383,8 +388,14 @@ object CrawlEngine {
     val ranged = df.repartitionByRange(math.max(parts, 1), order: _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
-    val counts = timed(s"rank-counts($seqCol)")(ranged.groupBy(col("__pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
+    // rows per range, counted partition-locally over the cache (each
+    // cached partition is exactly one range: its rows carry its __pid) —
+    // no exchange — inside a Dataset action, so the job keeps its SQL
+    // execution
+    import df.sparkSession.implicits._
+    val counts = ranged.select(col("__pid")).as[Int]
+      .mapPartitions(it => if (it.hasNext) Iterator(it.next() -> (1L + it.size)) else Iterator.empty)
+      .collect().sortBy(_._1)
     var acc = 0L
     val offsetByPid = counts.map { case (pid, n) => val o = acc; acc += n; pid -> o }.toMap
     val offExpr =
@@ -394,8 +405,12 @@ object CrawlEngine {
           lit(offsetByPid.keys.toArray),
           lit(offsetByPid.values.toArray)),
         col("__pid")), lit(0L))
-    val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
-    (ranged.withColumn(seqCol, (offExpr + row_number().over(w)).cast("long")), ranged, acc)
+    // a row's rank within its range is its position in the locally
+    // sorted partition — no exchange. The nondeterministic position
+    // column also keeps the optimizer from dropping the sort.
+    val position = monotonically_increasing_id() - shiftleft(spark_partition_id().cast("long"), 33)
+    (ranged.sortWithinPartitions(order: _*).withColumn(seqCol, offExpr + position + 1L),
+      ranged, acc)
   }
 
   /** One crawl round (§3.1 rebuild): gate → rank → cut → fetch-join →
@@ -436,9 +451,14 @@ object CrawlEngine {
     val meta0 = store.readMeta(version)
     // pre-round-3 snapshots lack projectId/taskType (frontier) and
     // failCount (hosts): backfill defaults on read so an old state dir
-    // resumes instead of failing with AnalysisException (round-2 ADVICE)
-    val frontier = frontierCompat(store.readFrontier(version), cfg)
-    val hosts = hostsCompat(store.readHosts(version))
+    // resumes instead of failing with AnalysisException (round-2 ADVICE).
+    // The merged views feed the gate (and a full commit's rewrite); the
+    // C2 anti-join and a delta commit's rewrites read the parts directly
+    // below, so the keep-latest window runs only where a merged row is used.
+    val frontierSparse = store.sparseColumns("frontier", version)
+    val hostsSparse = store.sparseColumns("hosts", version)
+    val frontier = frontierCompat(store.readFrontier(version), cfg, frontierSparse)
+    val hosts = hostsCompat(store.readHosts(version), hostsSparse)
     // a snapshot written WITH the write-back sink carries a `source` column;
     // resuming it without the sink must not drop previously written-back
     // text on the next full rewrite (round-4 ADVICE #3) — carry the column
@@ -613,19 +633,23 @@ object CrawlEngine {
         else // resumed from a pre-filter snapshot: rebuild from frontier
           graft.seen.BloomShards.buildDf(frontier.select("urlNorm"), "urlNorm",
             cfg.seenShards, cfg.seenExpectedPerShard, cfg.seenFpp))
+    // The seen set is the raw urlNorm union of the frontier parts: rows
+    // are never deleted and an id's urlNorm never changes, so it IS the
+    // merged view's key set — no keep-latest window needed (duplicates do
+    // not change an anti-join).
     // (anti-joins hinted shuffle_hash for the same no-re-sort reason)
-    val seenSet = frontier.select(col("urlNorm").as("newNorm")).hint("shuffle_hash")
+    val seenSet = store.readFrontierUnmerged(version)
+      .select(col("urlNorm").as("newNorm")).hint("shuffle_hash")
     val newLinks = seenShards match {
       case None =>
         candidates.join(seenSet, Seq("newNorm"), "left_anti")
       case Some(shardsDf) =>
-        val flags = graft.seen.BloomShards
-          .probeFlagsDf(candidates.select(col("newNorm")), "newNorm", shardsDf, cfg.seenShards)
-          .withColumnRenamed("maybe", "__maybe")
-        // candidates' newNorm is unique (rn=1 window) so this join is 1:1
-        val flagged = candidates.join(flags, Seq("newNorm"), "left")
-        val sure = flagged.filter(not(coalesce(col("__maybe"), lit(false)))).drop("__maybe")
-        val confirmed = flagged.filter(coalesce(col("__maybe"), lit(false))).drop("__maybe")
+        // each candidate row meets its shard's filter in the probe itself
+        // and comes back flagged — no (key, flag) pairs joined back
+        val flagged = graft.seen.BloomShards
+          .probeFlagsDf(candidates, "newNorm", shardsDf, cfg.seenShards)
+        val sure = flagged.filter(not(col("maybe"))).drop("maybe")
+        val confirmed = flagged.filter(col("maybe")).drop("maybe")
           .join(seenSet, Seq("newNorm"), "left_anti")
         sure.unionByName(confirmed)
     }
@@ -684,12 +708,18 @@ object CrawlEngine {
         (if (writeBack)
            Seq(when(col("outcome") === Outcome.Success, col("parsed.text")).as("__wbSource"))
          else Nil)): _*).hint("shuffle_hash")
-    val frontierForUpdate =
-      if (carrySource && !frontier.columns.contains("source"))
-        frontier.withColumn("source", lit(null).cast("string"))
+    // delta commits keep ONLY the rows this round touched: the batch's ids
+    // are semi-joined into the parts before the keep-latest window, and
+    // the outcome join is inner. Full commits rewrite everything (the
+    // merged view, left join) — same rewrite exprs either way.
+    val frontierRows =
+      if (deltaMode)
+        frontierCompat(store.readFrontierFor(version, fetched.select("id")), cfg, frontierSparse)
       else frontier
-    // delta commits keep ONLY the rows this round touched (inner join);
-    // full commits rewrite everything (left join) — same rewrite exprs
+    val frontierForUpdate =
+      if (carrySource && !frontierRows.columns.contains("source"))
+        frontierRows.withColumn("source", lit(null).cast("string"))
+      else frontierRows
     val updated = frontierForUpdate
       .join(outcomes, Seq("id"), if (deltaMode) "inner" else "left")
       .withColumn("newAttempt",
@@ -749,14 +779,17 @@ object CrawlEngine {
             coalesce(col("rbDelayTicks"), lit(0L)))))
       .select(col("host"), col("newTick"), col("nFails"))
     // full commit: every host row re-materialized (the merged view).
-    // delta commit: ONLY hosts this round touched — the old failCount rides
-    // a right join (touched side preserved), untouched hosts stay on disk
-    // and the snapshot layer keeps-latest-by-host at read time. Same
-    // rewrite exprs either way (round-2 scale-killer B: at 10^8 hosts the
-    // full-outer rewrite was a frontier-sized write per round).
+    // delta commit: ONLY hosts this round touched — their merged rows (the
+    // batch's hosts semi-joined into the parts before the window) carry
+    // the old failCount through a right join (touched side preserved),
+    // untouched hosts stay on disk and the snapshot layer keeps-latest-by-
+    // host at read time. Same rewrite exprs either way (round-2 scale-
+    // killer B: at 10^8 hosts the full-outer rewrite was a frontier-sized
+    // write per round).
     val hosts2 =
       if (deltaMode)
-        hosts.select(col("host"), col("failCount")).join(hostUpdates, Seq("host"), "right")
+        hostsCompat(store.readHostsFor(version, fetched.select("host")), hostsSparse)
+          .select(col("host"), col("failCount")).join(hostUpdates, Seq("host"), "right")
           .withColumn("failCount2",
             (coalesce(col("failCount"), lit(0)) + coalesce(col("nFails"), lit(0))).cast("int"))
           .select(col("host"),

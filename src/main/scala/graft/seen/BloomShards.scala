@@ -305,26 +305,37 @@ object BloomShards {
     updateDf(emptyDf(keys.sparkSession, nShards, expectedPerShard, fpp),
       keys, keyCol, nShards)
 
-  /** Distributed probe: (key, maybe) for every distinct non-null key of
-    * `keys`. Keys shuffle to their shard's cogroup group; each group
-    * deserializes its filter once and streams its keys through it. */
-  def probeFlagsDf(keys: DataFrame, keyCol: String, shards: DataFrame, nShards: Int): DataFrame = {
+  /** Distributed probe: every row of `rows` plus a boolean `maybe`, true
+    * iff its `keyCol` MIGHT be in the seen set (false for a null key).
+    * Rows shuffle to their key's shard and meet the filter bytes in a
+    * cogroup — each group deserializes its filter once and streams its
+    * rows through it — so a caller that needs the rest of the row does not
+    * join (key, flag) pairs back onto it. */
+  def probeFlagsDf(rows: DataFrame, keyCol: String, shards: DataFrame, nShards: Int): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.BooleanType
     val spark = shards.sparkSession
     import spark.implicits._
-    val keysKV = withShard(keys, keyCol, nShards)
-      .as[(String, Int)].groupByKey(_._2)
+    val width = rows.schema.length
+    val rowsKV = rows
+      .withColumn("__k", col(keyCol).cast("string"))
+      .withColumn("__shard", pmod(xxhash64(col("__k")), lit(nShards.toLong)).cast("int"))
+      .groupByKey((r: Row) => r.getInt(width + 1))
     val shardsKV = shards.select(col("shard").cast("int"), col("bytes"))
       .as[(Int, Array[Byte])].groupByKey(_._1)
-    shardsKV.cogroup(keysKV) { (sid, bs, ks) =>
-      if (ks.isEmpty) Iterator.empty
+    shardsKV.cogroup(rowsKV) { (sid, bs, rs) =>
+      if (rs.isEmpty) Iterator.empty
       else {
         val existing = bs.map(_._2).toList
         if (existing.isEmpty)
           throw new IllegalStateException(s"seen-shard $sid missing from snapshot")
         val f = BloomFilter.readFrom(new ByteArrayInputStream(existing.head))
-        ks.map { case (k, _) => (k, f.mightContainString(k)) }
+        rs.map { r =>
+          val k = r.getString(width)
+          Row.fromSeq(r.toSeq.take(width) :+ (k != null && f.mightContainString(k)))
+        }
       }
-    }.toDF(keyCol, "maybe")
+    }(Encoders.row(rows.schema.add("maybe", BooleanType, nullable = false)))
   }
 
   /** The full exact-seen pattern: rows of `candidates` whose `keyCol` is NOT

@@ -12,6 +12,9 @@ object SharedSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // as the program's own sessions: the default cache of 100 generated
+      // classes is smaller than one crawl round's working set
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
